@@ -21,7 +21,11 @@ call the caller may never make.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def free_checkpoint(df: DataFrame) -> None:
@@ -35,12 +39,13 @@ def free_checkpoint(df: DataFrame) -> None:
     storage blocks drop to zero immediately). Only call this once the
     DataFrame (and anything derived from it) is fully consumed: the
     blocks are its only data source. Best-effort — any plan-shape
-    surprise degrades back to ContextCleaner GC.
+    surprise degrades back to ContextCleaner GC, logged as a warning
+    with its traceback.
     """
     try:
         _walk(df._jdf.queryExecution().analyzed())
     except Exception:
-        pass
+        _log.warning("free_checkpoint: plan walk failed; blocks left to the ContextCleaner", exc_info=True)
 
 
 def _walk(node) -> None:
@@ -48,7 +53,7 @@ def _walk(node) -> None:
         try:
             node.rdd().unpersist(False)
         except Exception:
-            pass
+            _log.warning("free_checkpoint: unpersist failed; blocks left to the ContextCleaner", exc_info=True)
     it = node.children().iterator()
     while it.hasNext():
         _walk(it.next())

@@ -24,6 +24,8 @@ tests (SURVEY §7.4 hard part 3).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -192,6 +194,12 @@ def minhash_signatures(
     hashed = shingle_stream(df, id_col, text_col, n).select(
         id_col, F.xxhash64("shingle").alias("h")
     )
+    return _minhash(hashed, id_col, num_hashes)
+
+
+def _minhash(hashed: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
+    """(id, m0..m{num_hashes-1}) from an (id, h) stream of xxhash64
+    shingle hashes, one or more rows per shingle."""
     # duplicate shingle occurrences don't change a min-fold — no distinct
     # pass. The num_hashes rehashes are PROJECTED before the groupBy rather
     # than inlined in the min() aggregates: same shuffle either way (partial
@@ -245,8 +253,43 @@ def minhash_lsh_pairs(
     shuffles are the signature groupBy, the band-bucket self-join, and the
     final verification join.
     """
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
+
+    # shingle sets are built only for docs that appear in a candidate pair
+    # (≪ corpus), semi-joined first. Sets are collected from the codegen
+    # shingle_stream (zip-sliced) as xxhash64 longs, not via shingles() HOF
+    # arrays: the lambda transform evaluates interpreted per shingle
+    # (~20µs), and long-array intersection beats string-array intersection
+    # downstream. A 64-bit hash collision merging two distinct shingles is
+    # ~|sh|²/2⁶⁴ — negligible against the candidate set's own approximation.
+    def candidate_sets(cand_ids: DataFrame) -> DataFrame:
+        return (
+            shingle_stream(df.join(cand_ids, id_col, "left_semi"), id_col, text_col, n)
+            .groupBy(id_col)
+            .agg(F.collect_set(F.xxhash64("shingle")).alias("sh"))
+            .localCheckpoint(eager=True)
+        )
+
+    return _lsh_pairs(sig, id_col, bands, num_hashes // bands, threshold, candidate_sets)
+
+
+def _lsh_pairs(
+    sig: DataFrame,
+    id_col: str,
+    bands: int,
+    rows_per_band: int,
+    threshold: float,
+    candidate_sets: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """(id_a, id_b, jaccard) — LSH banding of a signature frame, bucket
+    candidates, exact-Jaccard verification: the back half shared by
+    ``minhash_lsh_pairs`` and ``corpus_dedup``.
+
+    ``candidate_sets(cand_ids)`` returns (id, sh) — the xxhash64 shingle
+    set of every doc in the one-column ``cand_ids`` frame. It is read by
+    both verification join branches, so it must be cheap to re-read (a
+    checkpoint or a projection of one).
+    """
     banded = _banded(sig, id_col, bands, rows_per_band)
 
     # pair generation WITHOUT a self-join: a self-join would execute the whole
@@ -269,22 +312,8 @@ def minhash_lsh_pairs(
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    # verify candidates with exact Jaccard — shingle sets are built only for
-    # docs that appear in a candidate pair (≪ corpus), semi-joined first.
-    # Sets are collected from the codegen shingle_stream (zip-sliced)
-    # as xxhash64 longs, not via shingles() HOF arrays: the lambda transform
-    # evaluates interpreted per shingle (~20µs), and long-array intersection
-    # beats string-array intersection downstream. A 64-bit hash collision
-    # merging two distinct shingles is ~|sh|²/2⁶⁴ — negligible against the
-    # candidate set's own approximation.
     cand_ids = cand.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
-    shdf = (
-        shingle_stream(df.join(cand_ids, id_col, "left_semi"), id_col, text_col, n)
-        .groupBy(id_col)
-        .agg(F.collect_set(F.xxhash64("shingle")).alias("sh"))
-        .localCheckpoint(eager=True)
-    )
+    shdf = candidate_sets(cand_ids)
     verified = (
         cand.join(shdf.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
         .join(shdf.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
@@ -295,12 +324,12 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # cand/shdf are eager localCheckpoints, not persist()s: checkpoint
-    # blocks are released by the ContextCleaner when the caller drops the
-    # result (and can be freed deterministically via caching.free_checkpoint),
-    # whereas CacheManager entries leak forever unless every caller knows
-    # to unpersist an ad-hoc handle — a contract that doesn't survive
-    # DataFrame transformations.
+    # cand (and any set checkpoint) are eager localCheckpoints, not
+    # persist()s: checkpoint blocks are released by the ContextCleaner when
+    # the caller drops the result (and can be freed deterministically via
+    # caching.free_checkpoint), whereas CacheManager entries leak forever
+    # unless every caller knows to unpersist an ad-hoc handle — a contract
+    # that doesn't survive DataFrame transformations.
     return verified.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
 
@@ -563,54 +592,62 @@ def corpus_dedup(
     ``score`` is any per-row quality expression (default: token count —
     "keep the doc with the most content"); the canonical doc of a
     cluster is argmax (score, -id), so selection is deterministic and
-    partitioning-independent. Returns one row per input doc:
-    (id_col, cluster_id, canonical_id, keep, n_members) — ``keep`` rows
+    partitioning-independent. Returns one row per input doc (``id_col``
+    is unique): (id_col, cluster_id, canonical_id, keep, n_members) — ``keep`` rows
     form the deduped corpus, ``~keep`` rows the drop ledger with their
     replacement.
 
-    Scale shape: exact edges shuffle (16-byte hash, id) only (the
-    representative aggregate from ``exact_dedup``'s two-pass form); near
-    edges come from the banded LSH pipeline (bucketed candidates, no
-    all-pairs, no self-join double-execution); clustering takes
+    Scale shape: ``docs`` is evaluated exactly ONCE per call. One
+    ``groupBy(id)`` over the zip-sliced shingle stream builds a narrow
+    per-doc feature frame (id, text_hash, _score, sh) — ``sh`` the doc's
+    set of xxhash64 shingle hashes, empty for docs with fewer than ``n``
+    tokens, empty text or NULL text (``explode_outer`` keeps their row) —
+    and one eager ``localCheckpoint`` materializes it. Every leg reads that
+    checkpoint, never ``docs``: exact edges are ``groupBy(text_hash)
+    .min(id)`` (hash + id on the wire); MinHash signatures fold
+    ``explode(sh)`` with map-side partial mins (one row per doc on the
+    wire); LSH banding and candidates are ``minhash_lsh_pairs``' own; verification semi-joins the checkpoint on
+    the candidate ids instead of re-shingling the text; clustering takes
     ``connected_components``' measured driver/distributed crossover; the
     final selection is one map-side-combined ``max_by`` aggregate on
-    (cluster_id) plus a broadcast-size join back — no full-payload
-    shuffle anywhere (the text column never travels; only ids, hashes,
-    and scores do).
+    (cluster_id) plus a join back. The text column never travels. The
+    checkpoint holds ~8 bytes per distinct shingle per doc — the order of
+    the (shingle, id) index ``ngram_jaccard_pairs`` checkpoints — and is
+    released with the result (``caching.free_checkpoint(result)`` frees it).
+    Reading ``docs`` once matters because it may carry an arbitrary plan —
+    in a curation chain, the quality gates and their joins.
     """
-    from audience_finder_pro_spark.functions.text import tokens
     from audience_finder_pro_spark.operators.graph import dedup_clusters
 
     if score is None:
         score = F.size(tokens(text_col))
 
-    h = docs.select(F.col(id_col), norm_text_hash(text_col).alias("text_hash"))
-    reps = h.groupBy("text_hash").agg(F.min(id_col).alias("_rep"))
+    feat = _doc_features(docs, score, id_col, text_col, n).localCheckpoint(eager=True)
+
+    reps = feat.groupBy("text_hash").agg(F.min(id_col).alias("_rep"))
     exact_edges = (
-        h.join(reps, "text_hash")
+        feat.join(reps, "text_hash")
         .filter(F.col(id_col) != F.col("_rep"))
         .select(F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b"))
     )
-    near_edges = minhash_lsh_pairs(
-        docs, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands, threshold=threshold
+    # a min-fold ignores duplicate shingles, so signatures over the SET
+    # equal minhash_signatures' over every occurrence; explode drops the
+    # empty sets (no shingles → no signature row, as there)
+    sig = _minhash(feat.select(id_col, F.explode("sh").alias("h")), id_col, num_hashes)
+    near_edges = _lsh_pairs(
+        sig,
+        id_col,
+        bands,
+        num_hashes // bands,
+        threshold,
+        lambda cand_ids: feat.join(cand_ids, id_col, "left_semi").select(id_col, "sh"),
     ).select("id_a", "id_b")
-    clusters = dedup_clusters(docs, exact_edges.unionByName(near_edges), id_col=id_col)
+    clusters = dedup_clusters(feat, exact_edges.unionByName(near_edges), id_col=id_col)
 
-    # scored feeds two consumers (the keep-best aggregate and the final
-    # verdict join) and re-executes its docs-scan + cluster join per
-    # consumer. Materializing it was measured and REJECTED at sf0.1 (r14
-    # A/B, fresh-session best/median, baseline 4.23/4.58s): eager
-    # localCheckpoint 5.04/6.19s, lazy 4.56/5.28s — the blocking pass /
-    # RDD boundary costs more than re-running a narrow scan+broadcast
-    # join whose expensive input (the CC cluster table) is already
-    # materialized inside connected_components. A window-form keep-best
-    # (max_by over cluster_id) would single-pass it but drops the
-    # aggregate's map-side combine — the exact hot-key hazard VERDICT
-    # r13 flagged on bm25's token window (a viral dup cluster = one
-    # straggler task at 100 TB) — so the two-level groupBy + join stays.
-    scored = docs.select(F.col(id_col), score.cast("double").alias("_score")).join(
-        clusters, id_col
-    )
+    # keep-best stays a two-level groupBy + join: a window-form max_by over
+    # cluster_id would single-pass it but drops the aggregate's map-side
+    # combine — a viral dup cluster would be one straggler task at scale
+    scored = feat.select(id_col, "_score").join(clusters, id_col)
     best = scored.groupBy("cluster_id").agg(
         F.max_by(id_col, F.struct(F.col("_score"), (-F.col(id_col)).alias("_nid"))).alias(
             "canonical_id"
@@ -623,6 +660,41 @@ def corpus_dedup(
         "canonical_id",
         (F.col(id_col) == F.col("canonical_id")).alias("keep"),
         "n_members",
+    )
+
+
+def _doc_features(
+    docs: DataFrame, score: Column, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, text_hash, _score, sh): one row per doc id, ``sh`` the
+    collect_set of xxhash64 over the doc's space-joined word n-grams —
+    the same shingle strings ``shingle_stream`` emits."""
+    tok = tokens(text_col)
+    # the zip-of-slices shape of functions/text.gram_stream, with every
+    # slice cut to the shingle count so no row is a null-padded tail
+    width = F.greatest(F.size(tok) - F.lit(n - 1), F.lit(0))
+    grams = F.arrays_zip(*[F.slice(tok, i + 1, width).alias(f"_s{i}") for i in range(n)])
+    # md5 and score are computed in this pre-explode projection, once per
+    # doc; a generator's sibling expressions would run once per shingle
+    per_doc = docs.select(
+        F.col(id_col),
+        norm_text_hash(text_col).alias("text_hash"),
+        score.cast("double").alias("_score"),
+        grams.alias("_grams"),
+    )
+    stream = per_doc.select(
+        id_col, "text_hash", "_score", F.explode_outer("_grams").alias("_z")
+    )
+    # the outer row of a shingle-less doc has a NULL _z: hash it to NULL,
+    # which collect_set skips, leaving an empty set
+    h = F.when(
+        F.col("_z").isNotNull(),
+        F.xxhash64(F.concat_ws(" ", *[F.col(f"_z._s{i}") for i in range(n)])),
+    )
+    return stream.groupBy(id_col).agg(
+        F.first("text_hash").alias("text_hash"),
+        F.first("_score").alias("_score"),
+        F.collect_set(h).alias("sh"),
     )
 
 

@@ -436,11 +436,12 @@ def triangle_counts(
     # level (all three references share ONE RDD, so the DAG scheduler
     # computes its shuffle once inside oriented's materialization job)
     # while folding e's materialization into oriented's action — one
-    # blocking pass instead of two. A/B at sf0.1, fresh sessions:
-    # eager+eager best 2.25s / median 2.54s (n=12); lazy+eager best
-    # 2.46s / median 3.55s (n=8); no-checkpoint best 2.43s / median
-    # 3.00s (n=12) — all within the weather band, so the shape with one
-    # blocking materialization and no re-execution wins on structure.
+    # blocking pass instead of two. The evidence for the pick is the
+    # end-to-end bench delta of the change that made it: dedup_triangles
+    # 3.94s -> 3.04s. The fresh-session A/B at sf0.1 does NOT support it:
+    # eager+eager best 2.25s / median 2.54s (n=12), lazy+eager 2.46s /
+    # 3.55s (n=8), no-checkpoint 2.43s / 3.00s (n=12) — all inside the
+    # weather band, with lazy+eager the slowest median of the three.
     e = (
         pairs.filter(a != b)
         .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
@@ -471,6 +472,8 @@ def triangle_counts(
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(a_first, F.col("_db")).otherwise(F.col("_da")).alias("dst_deg"),
     ).localCheckpoint(eager=True)
+    # oriented is materialized and nothing reads e again
+    _free_checkpoint(e)
     e1 = oriented.select(
         F.col("src"), F.col("dst").alias("v1"), F.col("dst_deg").alias("d1")
     )

@@ -38,6 +38,17 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _default_driver_mem() -> str:
+    """24g, capped at half the host's physical memory: in local mode the
+    driver heap is the whole engine's heap, and a heap larger than the
+    host lets the OS kill the JVM instead of Spark spilling."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows) or no such name
+        return "24g"
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(app_name: str = "audience_finder_pro_spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -61,7 +72,7 @@ def get_spark(app_name: str = "audience_finder_pro_spark", cpus: int | None = No
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # events.ts is parquet TIMESTAMP(NANOS) which Spark has no native

@@ -1618,6 +1618,109 @@ def test_corpus_dedup_consistent_with_cc_clusters(spark, sf_smoke):
         assert min(r.doc_id for r in rows) == cid  # cluster_id = min member id
 
 
+def test_corpus_dedup_evaluates_input_once(spark, sf_smoke):
+    """The input plan runs once per call: the per-doc feature checkpoint
+    is the only reader of ``docs``, through the build and the collect."""
+    from audience_finder_pro_spark.operators.dedup import corpus_dedup
+
+    raw = load_table(spark, sf_smoke, "documents")
+    n = raw.count()
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def counted(text):
+        evaluated.add(1)
+        return text
+
+    docs = raw.withColumn("text", F.udf(counted, "string")("text"))
+    out = corpus_dedup(docs)
+    assert evaluated.value == n
+    assert len(out.collect()) == n
+    assert evaluated.value == n
+
+
+def _corpus_dedup_reference(docs):
+    """corpus_dedup composed from the public operators, reading ``docs``
+    once per leg: md5 exact edges, minhash_lsh_pairs near edges,
+    dedup_clusters, keep-best by token count (ties to the lowest id)."""
+    from audience_finder_pro_spark.functions.text import norm_text_hash, tokens
+    from audience_finder_pro_spark.operators.graph import dedup_clusters
+
+    h = docs.select("doc_id", norm_text_hash("text").alias("text_hash"))
+    reps = h.groupBy("text_hash").agg(F.min("doc_id").alias("_rep"))
+    exact = (
+        h.join(reps, "text_hash")
+        .filter(F.col("doc_id") != F.col("_rep"))
+        .select(F.col("_rep").alias("id_a"), F.col("doc_id").alias("id_b"))
+    )
+    near = minhash_lsh_pairs(docs).select("id_a", "id_b")
+    clusters = dedup_clusters(docs, exact.unionByName(near))
+    scored = docs.select(
+        "doc_id", F.size(tokens("text")).cast("double").alias("_score")
+    ).join(clusters, "doc_id")
+    best = scored.groupBy("cluster_id").agg(
+        F.max_by("doc_id", F.struct("_score", (-F.col("doc_id")).alias("_nid"))).alias(
+            "canonical_id"
+        ),
+        F.count("*").alias("n_members"),
+    )
+    return scored.join(best, "cluster_id").select(
+        "doc_id",
+        "cluster_id",
+        "canonical_id",
+        (F.col("doc_id") == F.col("canonical_id")).alias("keep"),
+        "n_members",
+    )
+
+
+_WORDS = [f"w{i}" for i in range(80)]
+_TEXT = " ".join(f"v{i}" for i in range(40))  # shares no shingle with _WORDS
+
+
+@pytest.mark.parametrize(
+    "rows,same_cluster",
+    [
+        pytest.param(
+            [
+                (1, None),
+                (2, None),  # NULL text has no fingerprint: never an exact dup
+                (3, ""),
+                (4, ""),  # empty text IS one (md5 of ''), with no shingles
+                (5, "one"),
+                (6, "two tokens"),
+                (7, "Two   TOKENS"),  # exact copy of 6 after normalization
+                (8, _TEXT),
+            ],
+            [(3, 4), (6, 7)],
+            id="null_empty_short",
+        ),
+        pytest.param(
+            [
+                (1, " ".join(_WORDS[0:60])),  # A
+                (2, " ".join(_WORDS[10:70])),  # B: A~B (jaccard 0.71)
+                (3, " ".join(_WORDS[20:80])),  # C: B~C, A!~C (0.49)
+                (4, _TEXT),
+                (5, _TEXT.upper()),  # exact copy of 4
+                (6, _TEXT + " and more"),  # near copy of 4, most tokens
+                (7, "short unique"),
+            ],
+            [(1, 2, 3), (4, 5, 6)],
+            id="copies_and_chain",
+        ),
+    ],
+)
+def test_corpus_dedup_matches_operator_composition(spark, rows, same_cluster):
+    from audience_finder_pro_spark.operators.dedup import corpus_dedup
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(map(tuple, corpus_dedup(docs).collect()))
+    assert [r[0] for r in got] == [r[0] for r in rows]  # one verdict per doc
+    assert got == sorted(map(tuple, _corpus_dedup_reference(docs).collect()))
+    cluster = {r[0]: r[1] for r in got}
+    for ids in same_cluster:
+        assert len({cluster[i] for i in ids}) == 1, ids
+    assert len(set(cluster.values())) == len(rows) - sum(len(c) - 1 for c in same_cluster)
+
+
 # ------------------------------------------------ E25 passage-level repetition
 def test_repeated_passages_matches_sql_oracle(spark, sf_dir):
     """Registered oracle-less (driver slots fully funded) — this

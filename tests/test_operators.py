@@ -1898,3 +1898,22 @@ def test_touch_attribution_hot_user(spark):
             if r.model == "linear" and r.touch_date == t0.date()
         ]
         assert len(linear_day0) == 1 and linear_day0[0].attributed == 236.0
+
+
+def test_free_checkpoint_logs_what_it_swallows(caplog):
+    """Best-effort but not silent: a plan walk that raises is logged as a
+    warning with its traceback, and the call still returns."""
+    import logging
+    from types import SimpleNamespace
+
+    from audience_finder_pro_spark.caching import free_checkpoint
+
+    class BrokenPlan:
+        def queryExecution(self):
+            raise RuntimeError("plan walk failed")
+
+    with caplog.at_level(logging.WARNING, logger="audience_finder_pro_spark.caching"):
+        free_checkpoint(SimpleNamespace(_jdf=BrokenPlan()))
+    (rec,) = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert rec.exc_info and "plan walk failed" in str(rec.exc_info[1])
