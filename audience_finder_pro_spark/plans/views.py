@@ -17,8 +17,12 @@ Planted quirks exercised (FIXTURES.md):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 COMMENT_CHUNK = 10  # words per synthetic comment
 
@@ -30,21 +34,6 @@ COMMENT_CHUNK = 10  # words per synthetic comment
 # same rewrite a real deployment gets from time-partitioned layout.
 POST_TS_EPOCH = 1704067200  # 2024-01-01 00:00:00 UTC
 POST_TS_SPACING = 10800  # seconds between consecutive synthetic posts (3 h)
-
-# doc-count cache keyed by the parquet input paths: the count is a plan
-# constant (post_id = f(doc_id) % n_docs), and re-running the count job on
-# every view construction costs a driver-blocking action per query
-_N_DOCS_CACHE: dict[tuple[str, ...], int] = {}
-
-
-def _doc_count(documents) -> int:
-    from pyspark.sql import functions as F  # local import keeps module header tidy
-
-    key = tuple(documents.inputFiles())
-    if key not in _N_DOCS_CACHE:
-        _N_DOCS_CACHE[key] = documents.select(F.count("*")).first()[0]
-    return _N_DOCS_CACHE[key]
-
 
 def _src_num(col="source"):
     """source is always 'src' || (doc_id % 20) (verified against all SFs)."""
@@ -88,12 +77,17 @@ def posts_view(documents: DataFrame) -> DataFrame:
     )
 
 
-def comments_view(documents: DataFrame) -> DataFrame:
+def communities_view(documents: DataFrame) -> DataFrame:
+    """One row per document: its community display name and ``n_chars``
+    (the per-document input of the subscriber count)."""
+    return documents.select(_display_name("source").alias("community"), F.col("n_chars"))
+
+
+def comments_view(documents: DataFrame, n_docs: int) -> DataFrame:
     """Synthetic comment forest: each doc's word stream sliced into
     10-word chunks; chunk p of doc d attaches to post (d*31+p*7) % n_docs
     — models the flattened ``comments.list()`` of app.py:55-56,115-116.
     """
-    n_docs = _doc_count(documents)
     toks = documents.select(
         F.col("doc_id"),
         F.split("text", " ").alias("toks"),
@@ -143,12 +137,20 @@ def keywords_df(spark: SparkSession, keywords: list[str]) -> DataFrame:
     )
 
 
-def reddit_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    # Memoized per (session, sf_dir), same catalog rationale as
-    # session.load_table: the three view plans are pure functions of the
-    # input path, and rebuilding them costs a parquet footer read, an
-    # RDD-conversion roundtrip (getNumPartitions) and ~a hundred Py4J
-    # calls per query — a measurable share of wall time at toy SF.
+def reddit_views(spark: SparkSession, sf_dir: str) -> dict:
+    """The Reddit-shaped views of ``sf_dir``, memoized per (session, sf_dir).
+
+    The entry holds the view DataFrames (``documents``, ``subreddits``,
+    ``posts``, ``comments``, ``communities``), ``n_docs`` — the one count
+    every post_id arithmetic reads (the comment forest's attach modulus,
+    the time-window bound) — and ``views``: the session temp-view name of
+    each frame, which the SQL texts of ``plans.audience`` read from.
+
+    The view plans are pure functions of the input path, so they are
+    built, counted and registered once; rebuilding them costs a parquet
+    footer read, a count job, an RDD conversion (getNumPartitions) and
+    about a hundred Py4J calls per query.
+    """
     memo = getattr(spark, "_afp_view_memo", None)
     if memo is None:
         memo = {}
@@ -157,19 +159,31 @@ def reddit_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     if key in memo:
         return memo[key]
     documents = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    n_docs = documents.count()
     # the comment-forest view does CPU-heavy per-row expansion (token
     # chunking through higher-order lambdas); a small fixture file arrives
     # as ONE split, serializing that work — fan out when the scan gives
     # fewer splits than cores (no-op at real scale where inputs are wide)
     par = spark.sparkContext.defaultParallelism
-    if documents.rdd.getNumPartitions() < par:
+    n_parts = documents.rdd.getNumPartitions()
+    fan_out = n_parts < par
+    _log.info(
+        "reddit_views %s: scan has %d partitions, defaultParallelism %d -> %s",
+        key, n_parts, par, f"repartition({par})" if fan_out else "no fan-out",
+    )
+    if fan_out:
         documents = documents.repartition(par)
-    memo[key] = {
+    frames = {
         "subreddits": subreddits_view(documents),
         "posts": posts_view(documents),
-        "comments": comments_view(documents),
+        "comments": comments_view(documents, n_docs),
+        "communities": communities_view(documents),
         "documents": documents,
     }
+    views = {name: f"afp{len(memo)}_{name}" for name in frames}
+    for name, df in frames.items():
+        df.createOrReplaceTempView(views[name])
+    memo[key] = {**frames, "n_docs": n_docs, "views": views}
     return memo[key]
 
 
@@ -221,5 +235,12 @@ comments AS (
 
 
 def oracle_keywords_cte(keywords: list[str]) -> str:
-    vals = ", ".join(f"({i + 1}, '{kw}')" for i, kw in enumerate(keywords))
+    """DuckDB CTE ``keywords(kw_pos, keyword)``: one row per keyword, in list
+    order. Quotes are doubled, so any keyword text is a string literal; an
+    empty list gives an empty table."""
+    if not keywords:
+        return "keywords(kw_pos, keyword) AS (SELECT 1, '' WHERE false)"
+    vals = ", ".join(
+        "({}, '{}')".format(i + 1, kw.replace("'", "''")) for i, kw in enumerate(keywords)
+    )
     return f"keywords(kw_pos, keyword) AS (SELECT * FROM (VALUES {vals}))"

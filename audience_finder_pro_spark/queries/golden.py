@@ -164,7 +164,8 @@ def signal_scan_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     (app.py:83,256): only posts created in the last 30 days of the
     synthetic timeline compete for the top-k slots. The Spark plan pushes
     the window as a post_id PushedFilter (monotone-timeline rewrite,
-    plans/audience._time_window_pred); the oracle filters created_ts."""
+    plans/audience._min_post, bound as :min_post); the oracle filters
+    created_ts."""
     return scan_signals(
         spark,
         sf_dir,

@@ -91,9 +91,9 @@ def test_signal_scan_no_join_for_keyword_match(spark, sf_smoke, no_aqe):
 
 def test_signal_scan_month_time_window_pushed_to_scan(spark, sf_smoke, no_aqe):
     """The time_filter window is rewritten onto the monotone post_id key
-    (plans/audience._time_window_pred) and must reach the parquet scan as a
-    PushedFilter on doc_id — a created_ts filter on the derived column
-    would not push."""
+    (plans/audience._min_post, bound as :min_post) and must reach the
+    parquet scan as a PushedFilter on doc_id — a created_ts filter on the
+    derived column would not push."""
     plan = _plan(spark, "signal_scan_month", sf_smoke)
     assert re.search(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(doc_id,", plan), plan[:800]
 
